@@ -460,11 +460,11 @@ object SparkEntry {
       // §2.6: actions are only sequential because driver code calls
       // them sequentially). Results are byte-identical to the
       // sequential build; only wall-clock changes.
-      val bmF = concurrent.Future(Retrieval.writeBm25Index(docs, s"$dir/bm25"))(
-        concurrent.ExecutionContext.global)
-      val emb = TextOps.embedFrame(docs).localCheckpoint()
-      Similarity.writeAnnIndex(emb, s"$dir/ann")
-      concurrent.Await.result(bmF, concurrent.duration.Duration.Inf)
+      val (_, emb) = Par.overlap(Retrieval.writeBm25Index(docs, s"$dir/bm25")) {
+        val emb = TextOps.embedFrame(docs).localCheckpoint()
+        Similarity.writeAnnIndex(emb, s"$dir/ann")
+        emb
+      }
       Retrieval.rrfFusionServed(
         Retrieval.readBm25Index(s, s"$dir/bm25"),
         Similarity.readAnnIndex(s, s"$dir/ann"),
@@ -1056,11 +1056,11 @@ object SparkEntry {
       val docs = Tables(s, d).documents
       val tmp = scratchDir("graft_s25_")
       // independent artifact builds overlapped — q134's r19 rationale
-      val bmF = concurrent.Future(Retrieval.writeBm25Index(docs, s"$tmp/bm25"))(
-        concurrent.ExecutionContext.global)
-      val emb = TextOps.embedFrame(docs).localCheckpoint()
-      Similarity.writeAnnIndex(emb, s"$tmp/ann")
-      concurrent.Await.result(bmF, concurrent.duration.Duration.Inf)
+      val (_, emb) = Par.overlap(Retrieval.writeBm25Index(docs, s"$tmp/bm25")) {
+        val emb = TextOps.embedFrame(docs).localCheckpoint()
+        Similarity.writeAnnIndex(emb, s"$tmp/ann")
+        emb
+      }
       val schema = s.read.parquet(s"$d/documents.parquet").schema
       val queries = s.readStream.schema(schema)
         .parquet(Streams.asStreamPath(s"$d/documents.parquet"))

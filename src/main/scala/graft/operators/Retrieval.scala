@@ -256,23 +256,24 @@ object Retrieval {
     // — overlap them (guide §2.6; r20): a crash with either leg
     // missing/partial is the same pre-commit torn state the epoch
     // cross-checks already refuse
-    val postingsF = concurrent.Future {
+    val (_, st) = graft.Par.overlap {
       tfd.withColumn("_p_shard", pmod(xxhash64(col("term")), lit(IndexShards)))
         .withColumn("_b_epoch", lit(0L))
         .write.mode("overwrite").partitionBy("_p_shard", "_b_epoch")
         .parquet(s"$path/postings")
-    }(concurrent.ExecutionContext.global)
-    // ONE stats aggregation, pinned (r19): the 1-row frame feeds both
-    // the lexicon's idf crossJoin and the stats leg — un-pinned it
-    // re-aggregated the postings per consumer
-    val st = statsFrame(tfd).localCheckpoint()
-    tfd.groupBy("term").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(st))
-      .withColumn("idf_q", expr(idfExpr))
-      .select("term", "df", "idf_q")
-      .withColumn("_l_epoch", lit(0L))
-      .write.mode("overwrite").parquet(s"$path/lexicon")
-    concurrent.Await.result(postingsF, concurrent.duration.Duration.Inf)
+    } {
+      // ONE stats aggregation, pinned (r19): the 1-row frame feeds both
+      // the lexicon's idf crossJoin and the stats leg — un-pinned it
+      // re-aggregated the postings per consumer
+      val st = statsFrame(tfd).localCheckpoint()
+      tfd.groupBy("term").agg(count(lit(1)).as("df"))
+        .crossJoin(broadcast(st))
+        .withColumn("idf_q", expr(idfExpr))
+        .select("term", "df", "idf_q")
+        .withColumn("_l_epoch", lit(0L))
+        .write.mode("overwrite").parquet(s"$path/lexicon")
+      st
+    }
     st
       .withColumn("_p_fbits", lit(Bm25FBits))
       .withColumn("_p_shards", lit(IndexShards))
@@ -454,6 +455,10 @@ object Retrieval {
     * merged lexicon through the [[graft.operators.Dedup.compactSwap]]
     * write→validate→rename choreography, stamped E+1; (3) stats LAST
     * — the commit point — through the same choreography, epoch E+1.
+    * Each step has fully landed before the next starts: the postings
+    * append overlaps only the merged lexicon's materialization (a
+    * read of the live lexicon), never either swap, so the lexicon swap
+    * can never run while the postings are still in flight.
     * A crash between any two steps leaves legs at different epochs,
     * which [[readBm25Index]] detects and refuses to serve (fail loud,
     * never silently mis-score). The swap choreography additionally
@@ -501,16 +506,6 @@ object Retrieval {
         "fixed-point contribution would wrap; truncate pathological " +
         "documents or narrow Bm25FBits")
     val newEpoch = idx.epoch + 1L
-    // the batch's postings append and the lexicon merge are independent
-    // work over the pinned tfd, both ahead of the stats commit point —
-    // overlap them (guide §2.6; r20). Awaited before the stats swap:
-    // the commit order's only load-bearing edge is "stats LAST".
-    val postingsF = concurrent.Future {
-      tfd.withColumn("_p_shard", pmod(xxhash64(col("term")), lit(IndexShards)))
-        .withColumn("_b_epoch", lit(newEpoch))
-        .write.mode("append").partitionBy("_p_shard", "_b_epoch")
-        .parquet(s"$path/postings")
-    }(concurrent.ExecutionContext.global)
     // merged lexicon materialized BEFORE the same-path rewrite (the
     // q129 stamp-spec precedent: localCheckpoint detaches the frame
     // from the files the swap is about to replace). LAZY checkpoint +
@@ -525,7 +520,14 @@ object Retrieval {
       .select("term", "df", "idf_q")
       .withColumn("_l_epoch", lit(newEpoch))
       .localCheckpoint(false)
-    val wantTerms = mergedLex.count()
+    // the postings append overlaps only the merged-lexicon count (guide
+    // §2.6): it lands BEFORE the lexicon swap — the documented order
+    val (_, wantTerms) = graft.Par.overlap {
+      tfd.withColumn("_p_shard", pmod(xxhash64(col("term")), lit(IndexShards)))
+        .withColumn("_b_epoch", lit(newEpoch))
+        .write.mode("append").partitionBy("_p_shard", "_b_epoch")
+        .parquet(s"$path/postings")
+    }(mergedLex.count())
     Dedup.compactSwap(spark, s"$path/lexicon", what = "bm25 lexicon")(tmp =>
       mergedLex.write.mode("overwrite").parquet(tmp)
     ) { tmp =>
@@ -544,8 +546,6 @@ object Retrieval {
           "readBm25Index will refuse it. Rebuild, or restore the " +
           "lexicon/stats __precompact recovery copies and re-run the append")
     }
-    // both pre-commit legs must be fully landed before the commit point
-    concurrent.Await.result(postingsF, concurrent.duration.Duration.Inf)
     import spark.implicits._
     val newStats = Seq((nDocs, lTokens, maxDl, avgdlQ))
       .toDF("n_docs", "l_tokens", "max_dl", "avgdl_q")
@@ -856,34 +856,34 @@ object Retrieval {
     // the semantic query-frame pin + probe-cell collect) — they are
     // independent, so build the legs concurrently (guide §2.6; r20):
     // the fused plan itself is unchanged, only the pre-jobs overlap
-    val lexF = concurrent.Future {
+    val (lex, sem) = graft.Par.overlap {
       bm25ServeIndex(bm25, queries, k = poolK,
           maxDfPpm = maxDfPpm, excludeId = true)
         .select(col("query_id"), col("doc_id"), col("rank").as("r_lex"))
-    }(concurrent.ExecutionContext.global)
-    // the semantic leg's query frame is DERIVED from the lexical
-    // leg's when the caller doesn't supply one: the store rows whose
-    // vec_id appears in `queries.query_id` (corpus-member convention,
-    // a broadcast semi-join — `queries` is a KB-scale query batch).
-    // Falling through to annServeIndex's own default (the nQueries
-    // lowest corpus vec_ids) would silently decouple the two legs for
-    // any caller whose query set isn't exactly that convention —
-    // one-legged fusion rows with no error (r18 ADVICE).
-    // localCheckpoint: the serve consumes its query frame in THREE
-    // plan subtrees (probe list, ADC tables, exact-rerank query
-    // vectors — pqSearch's shape), so an un-pinned semi-join here
-    // re-executes store-scan + join once per subtree (r19 plan audit:
-    // q134 read scan=6/ex=21 against r18's 3/18 — the q75/q93 diamond
-    // rule). The frame is nQueries rows — KB at any corpus size.
-    val semQ = semQueries.getOrElse(
-      store.join(broadcast(queries.select(col("query_id").as("vec_id"))),
-        Seq("vec_id"), "left_semi").localCheckpoint())
-    val sem = Similarity.annServeIndex(ann, store, k = poolK,
-        nProbe = nProbe, rerank = rerank, queries = Some(semQ),
-        knownCorpusDim = knownCorpusDim)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"),
-        col("rank").as("r_sem"))
-    val lex = concurrent.Await.result(lexF, concurrent.duration.Duration.Inf)
+    } {
+      // the semantic leg's query frame is DERIVED from the lexical
+      // leg's when the caller doesn't supply one: the store rows whose
+      // vec_id appears in `queries.query_id` (corpus-member convention,
+      // a broadcast semi-join — `queries` is a KB-scale query batch).
+      // Falling through to annServeIndex's own default (the nQueries
+      // lowest corpus vec_ids) would silently decouple the two legs for
+      // any caller whose query set isn't exactly that convention —
+      // one-legged fusion rows with no error (r18 ADVICE).
+      // localCheckpoint: the serve consumes its query frame in THREE
+      // plan subtrees (probe list, ADC tables, exact-rerank query
+      // vectors — pqSearch's shape), so an un-pinned semi-join here
+      // re-executes store-scan + join once per subtree (r19 plan audit:
+      // q134 read scan=6/ex=21 against r18's 3/18 — the q75/q93 diamond
+      // rule). The frame is nQueries rows — KB at any corpus size.
+      val semQ = semQueries.getOrElse(
+        store.join(broadcast(queries.select(col("query_id").as("vec_id"))),
+          Seq("vec_id"), "left_semi").localCheckpoint())
+      Similarity.annServeIndex(ann, store, k = poolK,
+          nProbe = nProbe, rerank = rerank, queries = Some(semQ),
+          knownCorpusDim = knownCorpusDim)
+        .select(col("query_id"), col("neighbor_id").as("doc_id"),
+          col("rank").as("r_sem"))
+    }
     rrfFuse(lex, sem, k)
   }
 }

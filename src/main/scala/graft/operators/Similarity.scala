@@ -1427,22 +1427,22 @@ object Similarity {
     val toEncode = encodeOnly.getOrElse(embeddings)
     // the corpus encode+write is the build's long pole and is
     // independent of the KB-scale centroid/codebook writes and the
-    // n_codes count — overlap them (guide §2.6; r20), all awaited
+    // n_codes count — overlap them (guide §2.6; r20), all joined
     // before the stats commit point
-    val codesF = concurrent.Future {
+    val (_, nCodes) = graft.Par.overlap {
       pqEncode(prepared(toEncode), cents, bookC2, m, ks, dsub, residual)
         .withColumn("_p_cell", col("cell"))
         .withColumn("_b_epoch", lit(0L))
         .write.mode("overwrite").partitionBy("_p_cell", "_b_epoch")
         .parquet(s"$path/codes")
-    }(concurrent.ExecutionContext.global)
-    writeCentroids(cents, spark, s"$path/centroids")
-    writeCodebook(book, spark, s"$path/codebook")
-    // n_codes rides the stats so appends can merge it associatively
-    // and a serve never pays a codes count; encoding is 1:1 per
-    // vector, so the input count IS the code count
-    val nCodes = toEncode.count()
-    concurrent.Await.result(codesF, concurrent.duration.Duration.Inf)
+    } {
+      writeCentroids(cents, spark, s"$path/centroids")
+      writeCodebook(book, spark, s"$path/codebook")
+      // n_codes rides the stats so appends can merge it associatively
+      // and a serve never pays a codes count; encoding is 1:1 per
+      // vector, so the input count IS the code count
+      toEncode.count()
+    }
     Seq((m, ks, dsub, cents.length, residual, centStamp(cents),
         nCodes, 0L, -1L))
       .toDF("_p_m", "_p_ks", "_p_dsub", "_p_cells", "_p_residual",
@@ -1517,25 +1517,25 @@ object Similarity {
       .localCheckpoint()
     // the codes append and the health aggregation are independent
     // consumers of the pinned encode, both ahead of the stats commit
-    // point — overlap them (guide §2.6; r20), awaited before the swap
-    val codesF = concurrent.Future {
+    // point — overlap them (guide §2.6; r20), joined before the swap
+    val (_, h) = graft.Par.overlap {
       enc.drop("qerr")
         .withColumn("_b_epoch", lit(newEpoch))
         .write.mode("append").partitionBy("_p_cell", "_b_epoch")
         .parquet(s"$path/codes")
-    }(concurrent.ExecutionContext.global)
-    // per-row fixed point clamped at 0 (here and in the health/drift
-    // twins): FP cancellation can make a ~0 qerr minutely negative,
-    // and a negative SUM would make Scala Long `/` (truncates) and
-    // the oracle's DuckDB `//` (floors) diverge — clamped on BOTH
-    // sides, truncation ≡ floor is provable (r18 ADVICE)
-    val h = enc.agg(
-        count(lit(1)).as("n"),
-        countDistinct(col("cell")).as("cells"),
-        sum(greatest(floor(col("qerr") * lit(1048576.0) + lit(0.5))
-            .cast("long"), lit(0L)))
-          .as("sfp")).head()
-    concurrent.Await.result(codesF, concurrent.duration.Duration.Inf)
+    } {
+      // per-row fixed point clamped at 0 (here and in the health/drift
+      // twins): FP cancellation can make a ~0 qerr minutely negative,
+      // and a negative SUM would make Scala Long `/` (truncates) and
+      // the oracle's DuckDB `//` (floors) diverge — clamped on BOTH
+      // sides, truncation ≡ floor is provable (r18 ADVICE)
+      enc.agg(
+          count(lit(1)).as("n"),
+          countDistinct(col("cell")).as("cells"),
+          sum(greatest(floor(col("qerr") * lit(1048576.0) + lit(0.5))
+              .cast("long"), lit(0L)))
+            .as("sfp")).head()
+    }
     val nCodes = idx.nCodes + h.getAs[Long]("n")
     import spark.implicits._
     val newStats = Seq((idx.m, idx.ks, idx.dsub, idx.cents.length,
@@ -2091,11 +2091,12 @@ object Similarity {
     // The cached-read path (readSemanticStore) relies on this.
     val dim = cents.head._2.length
     val sz = embeddings
-      .agg(min(size(vecD(col("embedding")))).as("lo"),
+      .agg(count(lit(1)), min(size(vecD(col("embedding")))).as("lo"),
         max(size(vecD(col("embedding")))).as("hi")).first()
-    require(sz.getInt(0) == dim && sz.getInt(1) == dim,
+    if (sz.getLong(0) == 0L) return // empty (e.g. all-duplicate) batch: nothing to admit
+    require(!sz.isNullAt(1) && sz.getInt(1) == dim && sz.getInt(2) == dim,
       s"appendToSemanticStore: batch vector sizes span " +
-        s"[${sz.getInt(0)}, ${sz.getInt(1)}] but the store is dim $dim — " +
+        s"[${sz.get(1)}, ${sz.get(2)}] but the store is dim $dim — " +
         "a short vector would silently mis-score (DotProduct " +
         "truncates); fix the intake")
     ArtifactCache.invalidate(semCacheKey(path))

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.LongType
 
 /** Structured-Streaming re-expression of the reference's event-driven
@@ -21,9 +22,16 @@ import org.apache.spark.sql.types.LongType
   *
   * Scale: state per key is O(maxPerManifest) file entries; keys
   * (date prefixes) are few — state store stays tiny. Watermarks bound
-  * s02's window state. Sinks are exactly-once via checkpoint + file
-  * sink manifest, replacing the reference's SQS at-least-once +
-  * DynamoDB dedup.
+  * s02's window state. The parquet sink ([[ingestToParquet]]) is
+  * exactly-once via checkpoint + file sink manifest, replacing the
+  * reference's SQS at-least-once + DynamoDB dedup.
+  *
+  * Every foreachBatch loop here is run by [[microBatch]], under one
+  * contract: delivery is AT-LEAST-ONCE (a crash between a batch's
+  * writes and its checkpoint commit re-delivers the batch); replay
+  * fences live in the OPERATORS (s23/s24's appends persist the last
+  * applied batch id, so a replay is a no-op; unfenced loops re-append
+  * and say so); and a frame pinned with `pin` lasts for its batch only.
   */
 object Streams {
 
@@ -205,13 +213,36 @@ object Streams {
     * finite drain (catch-up runs, the restart spec). */
   def ingestToParquet(normalized: DataFrame, outDir: String,
                       checkpointDir: String,
-                      trigger: Option[Trigger] = None): StreamingQuery = {
-    val w = normalized.writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
+                      trigger: Option[Trigger] = None): StreamingQuery =
+    start(normalized.writeStream.format("parquet").option("path", outDir),
+      checkpointDir, trigger)
+
+  /** The sink tail every graft-started stream shares: checkpoint,
+    * Append, optional trigger, start. */
+  private def start(w: DataStreamWriter[Row], checkpointDir: String,
+                    trigger: Option[Trigger]): StreamingQuery = {
+    val c = w.option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append)
-    trigger.fold(w)(w.trigger).start()
+    trigger.fold(c)(c.trigger).start()
   }
+
+  /** The one micro-batch sink: `body(batch, batchId, pin)` per batch,
+    * under the contract in the object doc. `pin(df)` localCheckpoints
+    * `df`; when `body` returns or throws, each pin's blocks are freed by
+    * unpersisting the RDD behind its `LogicalRDD` (`Dataset.unpersist()`
+    * is a no-op there: the blocks are not in the cache manager). */
+  private[graft] def microBatch(df: DataFrame, checkpointDir: String,
+                                trigger: Option[Trigger])(
+      body: (DataFrame, Long, DataFrame => DataFrame) => Unit): StreamingQuery =
+    start(df.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      def pin(f: DataFrame): DataFrame = { val p = f.localCheckpoint(); pins += p; p }
+      try body(batch, batchId, pin)
+      finally pins.foreach(_.queryExecution.logical match {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+        case _ => ()
+      })
+    }, checkpointDir, trigger)
 
   /** [[ingestToParquet]] with per-micro-batch run reports — the
     * streaming analog of the reference's one-JSON-per-invocation lambda
@@ -219,26 +250,18 @@ object Streams {
     * batch ordinal). Implemented as foreachBatch around the SAME
     * [[graft.sources.RunReport.reportedWrite]] the batch path uses, so
     * report shape and metrics semantics are identical across both
-    * engines. foreachBatch trades the parquet sink's exactly-once file
-    * commit for at-least-once (a batch replayed after a crash appends
-    * its rows and its report again — run_id makes the replay visible);
-    * where exactly-once output matters, keep [[ingestToParquet]] and
-    * report at the file level instead. */
+    * engines. A replayed batch appends its rows and report again
+    * (run_id makes the replay visible); where exactly-once output
+    * matters, keep [[ingestToParquet]] and report per file instead. */
   def reportedIngest(normalized: DataFrame, outDir: String,
                      checkpointDir: String, reportDir: String,
                      jobName: String, targetPartitions: Int = 1,
-                     trigger: Option[Trigger] = None): StreamingQuery = {
-    val w = normalized.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.RunReport.reportedWrite(
-          batch, outDir, targetPartitions, jobName, reportDir,
-          runId = Some(s"$jobName#$batchId"))
-        ()
-      }
-    trigger.fold(w)(w.trigger).start()
-  }
+                     trigger: Option[Trigger] = None): StreamingQuery =
+    microBatch(normalized, checkpointDir, trigger) { (batch, batchId, _) =>
+      graft.sources.RunReport.reportedWrite(
+        batch, outDir, targetPartitions, jobName, reportDir,
+        runId = Some(s"$jobName#$batchId"))
+    }
 
   /** s10: the continuous validate→quarantine loop — the reference's
     * per-object Lambda validation (lambda_manifest_builder.py:543-592:
@@ -254,37 +277,30 @@ object Streams {
     *
     * Stateless per batch (pure row predicate — no state store), so
     * restart semantics come entirely from the source's file log:
-    * already-processed landing files are never re-judged. At-least-once
-    * like [[reportedIngest]]: a batch replayed after a mid-write crash
-    * appends again, run_id makes the replay visible. */
+    * already-processed landing files are never re-judged; a replayed
+    * batch appends again, and run_id makes the replay visible. */
   def streamQuarantine(docs: DataFrame, validDir: String,
                        quarantineDir: String, reportDir: String,
                        checkpointDir: String,
                        minChars: Int = 150, maxChars: Int = 450,
-                       trigger: Option[Trigger] = None): StreamingQuery = {
-    val w = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // NULL n_chars is quarantined EXPLICITLY: without the isNull arm
-        // the when-chain yields NULL and the row silently routes VALID —
-        // diverging from the s10 oracle's CASE, whose ELSE sends NULL to
-        // 'quarantined' (round-10 advice).
-        val judged = batch.withColumn("_quarantine_reason",
-          when(col("n_chars").isNull, "null_size")
-            .when(col("n_chars") < minChars, "below_min_size")
-            .when(col("n_chars") > maxChars, "above_max_size"))
-        judged.filter(col("_quarantine_reason").isNull)
-          .drop("_quarantine_reason")
-          .write.mode("append").parquet(validDir)
-        graft.sources.Ingest.quarantineWrite(
-          judged.filter(col("_quarantine_reason").isNotNull),
-          quarantineDir, reportDir, jobName = "stream_quarantine",
-          runId = Some(s"stream_quarantine#$batchId"))
-        ()
-      }
-    trigger.fold(w)(w.trigger).start()
-  }
+                       trigger: Option[Trigger] = None): StreamingQuery =
+    microBatch(docs, checkpointDir, trigger) { (batch, batchId, _) =>
+      // NULL n_chars is quarantined EXPLICITLY: without the isNull arm
+      // the when-chain yields NULL and the row silently routes VALID —
+      // diverging from the s10 oracle's CASE, whose ELSE sends NULL to
+      // 'quarantined' (round-10 advice).
+      val judged = batch.withColumn("_quarantine_reason",
+        when(col("n_chars").isNull, "null_size")
+          .when(col("n_chars") < minChars, "below_min_size")
+          .when(col("n_chars") > maxChars, "above_max_size"))
+      judged.filter(col("_quarantine_reason").isNull)
+        .drop("_quarantine_reason")
+        .write.mode("append").parquet(validDir)
+      graft.sources.Ingest.quarantineWrite(
+        judged.filter(col("_quarantine_reason").isNotNull),
+        quarantineDir, reportDir, jobName = "stream_quarantine",
+        runId = Some(s"stream_quarantine#$batchId"))
+    }
 
   /** s11: q76's snapshot diff as the continuous re-crawl loop. The
     * previous snapshot contributes ONLY its fingerprint store
@@ -306,22 +322,17 @@ object Streams {
                          outDir: String, checkpointDir: String,
                          trigger: Option[Trigger] = None): StreamingQuery = {
     val spark = intake.sparkSession
-    val w = intake
-      .select(col("doc_id"), graft.operators.TextOps.fingerprintCol.as("curr_fp"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val store = spark.read.parquet(storePath)
-        batch.join(store, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("prev_fp"), col("curr_fp"),
-            when(col("prev_fp").isNull, "added")
-              .when(col("prev_fp") === col("curr_fp"), "unchanged")
-              .otherwise("changed").as("verdict"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-    trigger.fold(w)(w.trigger).start()
+    microBatch(intake.select(col("doc_id"),
+        graft.operators.TextOps.fingerprintCol.as("curr_fp")),
+        checkpointDir, trigger) { (batch, _, _) =>
+      val store = spark.read.parquet(storePath)
+      batch.join(store, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("prev_fp"), col("curr_fp"),
+          when(col("prev_fp").isNull, "added")
+            .when(col("prev_fp") === col("curr_fp"), "unchanged")
+            .otherwise("changed").as("verdict"))
+        .write.mode("append").parquet(outDir)
+    }
   }
 
   /** s02: watermarked hourly tumbling-window aggregation. In append
@@ -374,31 +385,19 @@ object Streams {
     * contract), probe results per doc are independent of batching,
     * and the drained union equals one batch probe of the whole intake
     * (pinned in StreamingSpec).
-    *
-    * Same at-least-once caveat as [[reportedIngest]]: a micro-batch
-    * replayed after a crash appends its probe rows again —
-    * downstreams dedupe on (new_doc, dup_of) or consume the parquet
-    * transactionally. */
+    * A replayed batch appends its probe rows again — downstreams
+    * dedupe on (new_doc, dup_of). */
   def streamIncrementalDedup(intake: DataFrame, index: DataFrame,
                              existing: DataFrame, outDir: String,
                              checkpointDir: String, n: Int = 3,
                              numHashes: Int = 16, bands: Int = 4,
                              tau: Double = 0.5,
-                             trigger: Option[Trigger] = None): StreamingQuery = {
-    // no state-store flip here: this is a foreachBatch plan with no
-    // stateful operator — its "state" is the persisted band index, not
-    // the engine store, so a RocksDB default would only leak conf
-    val w = intake.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Dedup.incrementalProbeIndex(index, existing, batch,
-          n, numHashes, bands, tau)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-    trigger.fold(w)(w.trigger).start()
-  }
+                             trigger: Option[Trigger] = None): StreamingQuery =
+    microBatch(intake, checkpointDir, trigger) { (batch, _, _) =>
+      graft.operators.Dedup.incrementalProbeIndex(index, existing, batch,
+        n, numHashes, bands, tau)
+        .write.mode("append").parquet(outDir)
+    }
 
   /** s18: STREAMING DECONTAMINATION — q58's bloom-prefiltered exact
     * decontamination riding each micro-batch (the s08 static-index
@@ -420,8 +419,7 @@ object Streams {
     *
     * Per-doc verdicts are pure row functions of (doc, reference) —
     * independent of batching — so the drained union equals q35/q58's
-    * batch output row-identically and q35's oracle applies verbatim.
-    * Same at-least-once caveat as [[reportedIngest]] on crash replay. */
+    * batch output row-identically and q35's oracle applies verbatim. */
   def streamDecontaminate(intake: DataFrame, reference: DataFrame,
                           outDir: String, checkpointDir: String,
                           fpp: Double = 0.01,
@@ -431,19 +429,14 @@ object Streams {
       .distinct().localCheckpoint()
     val bloom = refFp.stat.bloomFilter("fingerprint",
       math.max(refFp.count(), 1L), fpp)
-    val w = intake.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch
-          .withColumn("fingerprint", graft.operators.TextOps.fingerprintCol)
-          .filter(graft.functions.Exprs.bloomMightContain(col("fingerprint"), bloom))
-          .join(refFp, Seq("fingerprint"), "left_semi")
-          .select("doc_id", "fingerprint")
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-    trigger.fold(w)(w.trigger).start()
+    microBatch(intake, checkpointDir, trigger) { (batch, _, _) =>
+      batch
+        .withColumn("fingerprint", graft.operators.TextOps.fingerprintCol)
+        .filter(graft.functions.Exprs.bloomMightContain(col("fingerprint"), bloom))
+        .join(refFp, Seq("fingerprint"), "left_semi")
+        .select("doc_id", "fingerprint")
+        .write.mode("append").parquet(outDir)
+    }
   }
 
   /** s21: STREAMING RETRIEVAL — micro-batch query serving against the
@@ -472,16 +465,11 @@ object Streams {
                       trigger: Option[Trigger] = None): StreamingQuery = {
     val spark = queries.sparkSession
     val index = graft.operators.Retrieval.readBm25Index(spark, indexPath)
-    val w = queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Retrieval
-          .bm25ServeIndex(index, batch, k = k, excludeId = excludeId)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-    trigger.fold(w)(w.trigger).start()
+    microBatch(queries, checkpointDir, trigger) { (batch, _, _) =>
+      graft.operators.Retrieval
+        .bm25ServeIndex(index, batch, k = k, excludeId = excludeId)
+        .write.mode("append").parquet(outDir)
+    }
   }
 
   /** s23: STREAMING INDEX INGESTION — the CLOSED intake loop on the
@@ -499,9 +487,7 @@ object Streams {
     * each prefix (the s09 batch-replay convention; rows key on
     * n_docs, which is strictly monotone over batches).
     *
-    * At-least-once replay (r17 ADVICE): foreachBatch re-delivers the
-    * last micro-batch after a restart that crashed between the index
-    * mutation and the checkpoint commit. The batchId rides into
+    * Replay fence (r17 ADVICE): the batchId rides into
     * [[graft.operators.Retrieval.appendBm25Index]], which persists
     * the last-applied id in the stats row and makes the replayed
     * append a NO-OP — postings can never double. The health row IS
@@ -516,32 +502,27 @@ object Streams {
                        trigger: Option[Trigger] = None): StreamingQuery = {
     val spark = intake.sparkSession
     import spark.implicits._
-    val w = intake.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batch.limit(1).count() > 0) {
-          val b = batch.localCheckpoint() // pin BEFORE the index mutation
-          // r20: the applied append RETURNS the health row's numbers
-          // (its own associative merges + the validated merged-lexicon
-          // count) — re-reading and re-counting the artifact it just
-          // committed was one full readBm25Index + a lexicon count per
-          // micro-batch. The replay path (None) recomputes read-only,
-          // content-identical (the appendAnnIndex/s24 convention).
-          val h = graft.operators.Retrieval.appendBm25Index(spark, b,
-              indexPath, batchId = Some(batchId))
-            .getOrElse {
-              val idx = graft.operators.Retrieval.readBm25Index(spark, indexPath)
-              graft.operators.Retrieval.Bm25IngestHealth(
-                idx.nDocs, idx.lTokens, idx.avgdlQ, idx.lexicon.count())
-            }
-          Seq((h.nDocs, h.lTokens, h.avgdlQ, h.nTerms))
-            .toDF("n_docs", "l_tokens", "avgdl_q", "n_terms")
-            .write.mode("append").parquet(outDir)
-        }
-        ()
+    microBatch(intake, checkpointDir, trigger) { (batch, batchId, pin) =>
+      if (batch.limit(1).count() > 0) {
+        val b = pin(batch) // BEFORE the index mutation
+        // r20: the applied append RETURNS the health row's numbers
+        // (its own associative merges + the validated merged-lexicon
+        // count) — re-reading and re-counting the artifact it just
+        // committed was one full readBm25Index + a lexicon count per
+        // micro-batch. The replay path (None) recomputes read-only,
+        // content-identical (the appendAnnIndex/s24 convention).
+        val h = graft.operators.Retrieval.appendBm25Index(spark, b,
+            indexPath, batchId = Some(batchId))
+          .getOrElse {
+            val idx = graft.operators.Retrieval.readBm25Index(spark, indexPath)
+            graft.operators.Retrieval.Bm25IngestHealth(
+              idx.nDocs, idx.lTokens, idx.avgdlQ, idx.lexicon.count())
+          }
+        Seq((h.nDocs, h.lTokens, h.avgdlQ, h.nTerms))
+          .toDF("n_docs", "l_tokens", "avgdl_q", "n_terms")
+          .write.mode("append").parquet(outDir)
       }
-    trigger.fold(w)(w.trigger).start()
+    }
   }
 
   /** s22: STREAMING ANN SERVING — s21's pattern on the semantic leg:
@@ -570,18 +551,13 @@ object Streams {
     val storeDim = store
       .select(size(col("embedding").cast("array<double>")))
       .first().getInt(0)
-    val w = queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Similarity
-          .annServeIndex(index, store, k = k, nProbe = nProbe,
-            rerank = rerank, queries = Some(batch),
-            knownCorpusDim = Some(storeDim))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-    trigger.fold(w)(w.trigger).start()
+    microBatch(queries, checkpointDir, trigger) { (batch, _, _) =>
+      graft.operators.Similarity
+        .annServeIndex(index, store, k = k, nProbe = nProbe,
+          rerank = rerank, queries = Some(batch),
+          knownCorpusDim = Some(storeDim))
+        .write.mode("append").parquet(outDir)
+    }
   }
 
   /** s24: STREAMING ANN INGESTION — s23's closed intake loop on the
@@ -618,25 +594,20 @@ object Streams {
                       trigger: Option[Trigger] = None): StreamingQuery = {
     val spark = intake.sparkSession
     import spark.implicits._
-    val w = intake.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batch.limit(1).count() > 0) {
-          val b = batch.localCheckpoint() // pin BEFORE the index mutation
-          val h = graft.operators.Similarity
-            .appendAnnIndex(spark, b, indexPath, batchId = Some(batchId))
-            .getOrElse {
-              graft.operators.Similarity.annIngestHealthOf(
-                graft.operators.Similarity.readAnnIndex(spark, indexPath), b)
-            }
-          Seq((h.nCodes, h.cellsTouched, h.meanQerrFp))
-            .toDF("n_codes", "cells_touched", "mean_qerr_fp")
-            .write.mode("append").parquet(outDir)
-        }
-        ()
+    microBatch(intake, checkpointDir, trigger) { (batch, batchId, pin) =>
+      if (batch.limit(1).count() > 0) {
+        val b = pin(batch) // BEFORE the index mutation
+        val h = graft.operators.Similarity
+          .appendAnnIndex(spark, b, indexPath, batchId = Some(batchId))
+          .getOrElse {
+            graft.operators.Similarity.annIngestHealthOf(
+              graft.operators.Similarity.readAnnIndex(spark, indexPath), b)
+          }
+        Seq((h.nCodes, h.cellsTouched, h.meanQerrFp))
+          .toDF("n_codes", "cells_touched", "mean_qerr_fp")
+          .write.mode("append").parquet(outDir)
       }
-    trigger.fold(w)(w.trigger).start()
+    }
   }
 
   /** s25: STREAMING HYBRID SERVING — the serving matrix's last cell:
@@ -668,54 +639,19 @@ object Streams {
     val storeDim = store
       .select(size(col("embedding").cast("array<double>")))
       .first().getInt(0)
-    val w = queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // two consumers (the lexical text leg + the embedded semantic
-        // leg) — pin the batch once
-        val b = batch.localCheckpoint()
-        graft.operators.Retrieval.rrfFusionServed(bm25, ann, store, b,
-            k = k,
-            semQueries = Some(graft.operators.TextOps.embedFrame(
-              b.select(col("query_id").as("doc_id"), col("text")))),
-            knownCorpusDim = Some(storeDim))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-    trigger.fold(w)(w.trigger).start()
+    microBatch(queries, checkpointDir, trigger) { (batch, _, pin) =>
+      // two consumers (the lexical text leg + the embedded semantic
+      // leg) — pin the batch once
+      val b = pin(batch)
+      graft.operators.Retrieval.rrfFusionServed(bm25, ann, store, b,
+          k = k,
+          semQueries = Some(graft.operators.TextOps.embedFrame(
+            b.select(col("query_id").as("doc_id"), col("text")))),
+          knownCorpusDim = Some(storeDim))
+        .write.mode("append").parquet(outDir)
+    }
   }
 
-  /** s09: the CLOSED continuous-dedup loop — s08 plus per-batch
-    * ADMISSION. s08 probes a static corpus index, so two intake
-    * batches that duplicate EACH OTHER both pass; here every batch,
-    * after probing, appends its survivors' band rows to the index
-    * ([[graft.operators.Dedup.appendToBandIndex]]) and their text to
-    * an admitted store — so batch N+1 dedups against the corpus AND
-    * every earlier batch's survivors. This is the lifecycle a real
-    * intake pipeline runs: the corpus index is built once, then only
-    * grows by admitted novelty; nothing is ever re-signatured.
-    *
-    * Per batch, strictly ordered: (1) read the CURRENT index + the
-    * admitted text store; (2) probe; (3) `localCheckpoint` the batch,
-    * its hits, and its survivors BEFORE any write — the probe must
-    * not observe the index mutation its own batch is about to make
-    * (a lazily re-evaluated plan would re-list the index files after
-    * the append and find the batch's own bands — self-pairs); (4)
-    * append hits to the output, survivor bands to the index, survivor
-    * text to the admitted store.
-    *
-    * Semantics: q45's contract per batch (intra-batch dups pass;
-    * dropped docs are NOT admitted, so later dups of a dropped doc
-    * flag against whatever condemned it, not the dropped doc).
-    * Batch-boundary determinism: results depend on which docs share a
-    * batch, so the batch-replay oracle fixes delivery (the s03
-    * single-file-per-trigger convention). At-least-once on restart,
-    * like [[reportedIngest]]: a replayed batch re-appends its hits
-    * and bands (the probe may then also emit self-pairs for its own
-    * re-admitted docs — a real re-delivery signal, q45's reading);
-    * duplicate band rows only widen candidate sets, which
-    * `incrementalProbeIndex`'s distinct collapses. */
   /** s09's admitted-store read, with its first-batch idiom made
     * crash-aware: an absent path is an empty admitted set ONLY when it
     * is genuinely a first batch. An absent live path with a
@@ -742,52 +678,70 @@ object Streams {
             StructField("text", StringType))))
     }
 
+  /** s09: the CLOSED continuous-dedup loop — s08 plus per-batch
+    * ADMISSION. s08 probes a static corpus index, so two intake
+    * batches that duplicate EACH OTHER both pass; here every batch,
+    * after probing, appends its survivors' band rows to the index
+    * ([[graft.operators.Dedup.appendToBandIndex]]) and their text to
+    * an admitted store — so batch N+1 dedups against the corpus AND
+    * every earlier batch's survivors. This is the lifecycle a real
+    * intake pipeline runs: the corpus index is built once, then only
+    * grows by admitted novelty; nothing is ever re-signatured.
+    *
+    * Per batch, strictly ordered: (1) read the CURRENT index + the
+    * admitted text store; (2) probe; (3) `localCheckpoint` the batch,
+    * its hits, and its survivors BEFORE any write — the probe must
+    * not observe the index mutation its own batch is about to make
+    * (a lazily re-evaluated plan would re-list the index files after
+    * the append and find the batch's own bands — self-pairs); (4)
+    * append hits to the output, survivor bands to the index, survivor
+    * text to the admitted store.
+    *
+    * Semantics: q45's contract per batch (intra-batch dups pass;
+    * dropped docs are NOT admitted, so later dups of a dropped doc
+    * flag against whatever condemned it, not the dropped doc).
+    * Batch-boundary determinism: results depend on which docs share a
+    * batch, so the batch-replay oracle fixes delivery (the s03
+    * single-file-per-trigger convention). A replayed batch re-appends its hits
+    * and bands (the probe may then also emit self-pairs for its own
+    * re-admitted docs — a real re-delivery signal, q45's reading);
+    * duplicate band rows only widen candidate sets, which
+    * `incrementalProbeIndex`'s distinct collapses. */
   def streamIncrementalDedupAdmit(intake: DataFrame, indexPath: String,
                                   existing: DataFrame, admittedDir: String,
                                   outDir: String, checkpointDir: String,
                                   n: Int = 3, numHashes: Int = 16,
                                   bands: Int = 4, tau: Double = 0.5,
-                                  trigger: Option[Trigger] = None): StreamingQuery = {
-    val w = intake.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        val idx = graft.operators.Dedup.readBandIndex(sp, indexPath,
-          n, numHashes, bands)
-        val admitted = readAdmittedStore(sp, admittedDir)
-        val existAll = existing.select(col("doc_id"), col("text"))
-          .unionByName(admitted)
-        val b = batch.localCheckpoint()
-        val hits = graft.operators.Dedup.incrementalProbeIndex(
-          idx, existAll, b, n, numHashes, bands, tau).localCheckpoint()
-        // first admission wins: a re-delivered doc_id whose text
-        // drifted BELOW tau (so the probe passed it) must not stack a
-        // second text row in the store — later verifies would fan out
-        // into duplicate, conflicting hit rows per pair. The anti-join
-        // is against the (novelty-sized) admitted set, not the corpus;
-        // corpus-vs-intake id disjointness stays the caller's contract
-        // (q45's split convention).
-        val survivors = b
-          .join(hits.select(col("new_doc").as("doc_id")).distinct(),
-            Seq("doc_id"), "left_anti")
-          .join(admitted.select(col("doc_id")), Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        hits.write.mode("append").parquet(outDir)
-        // params validated by THIS batch's readBandIndex above — the
-        // unchecked append skips a second full index listing
-        graft.operators.Dedup.appendToBandIndexValidated(survivors, indexPath,
-          n, numHashes, bands)
-        survivors.select(col("doc_id"), col("text"))
-          .write.mode("append").parquet(admittedDir)
-        // free the per-batch checkpoint blocks now, not at driver GC —
-        // a long-running stream would otherwise accumulate 3 dead
-        // block sets per micro-batch until the ContextCleaner fires
-        b.unpersist(); hits.unpersist(); survivors.unpersist()
-        ()
-      }
-    trigger.fold(w)(w.trigger).start()
-  }
+                                  trigger: Option[Trigger] = None): StreamingQuery =
+    microBatch(intake, checkpointDir, trigger) { (batch, _, pin) =>
+      val sp = batch.sparkSession
+      val idx = graft.operators.Dedup.readBandIndex(sp, indexPath,
+        n, numHashes, bands)
+      val admitted = readAdmittedStore(sp, admittedDir)
+      val existAll = existing.select(col("doc_id"), col("text"))
+        .unionByName(admitted)
+      val b = pin(batch)
+      val hits = pin(graft.operators.Dedup.incrementalProbeIndex(
+        idx, existAll, b, n, numHashes, bands, tau))
+      // first admission wins: a re-delivered doc_id whose text
+      // drifted BELOW tau (so the probe passed it) must not stack a
+      // second text row in the store — later verifies would fan out
+      // into duplicate, conflicting hit rows per pair. The anti-join
+      // is against the (novelty-sized) admitted set, not the corpus;
+      // corpus-vs-intake id disjointness stays the caller's contract
+      // (q45's split convention).
+      val survivors = pin(b
+        .join(hits.select(col("new_doc").as("doc_id")).distinct(),
+          Seq("doc_id"), "left_anti")
+        .join(admitted.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+      hits.write.mode("append").parquet(outDir)
+      // params validated by THIS batch's readBandIndex above — the
+      // unchecked append skips a second full index listing
+      graft.operators.Dedup.appendToBandIndexValidated(survivors, indexPath,
+        n, numHashes, bands)
+      survivors.select(col("doc_id"), col("text"))
+        .write.mode("append").parquet(admittedDir)
+    }
 
   /** s15: the CLOSED continuous loop for the SEMANTIC family — s09's
     * admit lifecycle transposed from the band index to q101's
@@ -818,31 +772,23 @@ object Streams {
                                cents: Array[(Long, Array[Double])],
                                outDir: String, checkpointDir: String,
                                tau: Double = 0.4,
-                               trigger: Option[Trigger] = None): StreamingQuery = {
-    val w = intake.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        val store = graft.operators.Similarity
-          .readSemanticStore(sp, storePath, cents)
-        val b = batch.localCheckpoint()
-        val hits = graft.operators.Similarity
-          .semanticProbeStore(b, store, cents, tau).localCheckpoint()
-        val survivors = b
-          .join(hits.select(col("vec_id")).distinct(), Seq("vec_id"),
-            "left_anti")
-          .localCheckpoint()
-        hits.write.mode("append").parquet(outDir)
-        // stamps validated by THIS batch's readSemanticStore above —
-        // the unchecked append skips a second full store listing
-        graft.operators.Similarity
-          .appendToSemanticStoreValidated(survivors, storePath, cents)
-        b.unpersist(); hits.unpersist(); survivors.unpersist()
-        ()
-      }
-    trigger.fold(w)(w.trigger).start()
-  }
+                               trigger: Option[Trigger] = None): StreamingQuery =
+    microBatch(intake, checkpointDir, trigger) { (batch, _, pin) =>
+      val sp = batch.sparkSession
+      val store = graft.operators.Similarity
+        .readSemanticStore(sp, storePath, cents)
+      val b = pin(batch)
+      val hits = pin(graft.operators.Similarity
+        .semanticProbeStore(b, store, cents, tau))
+      val survivors = pin(b
+        .join(hits.select(col("vec_id")).distinct(), Seq("vec_id"),
+          "left_anti"))
+      hits.write.mode("append").parquet(outDir)
+      // stamps validated by THIS batch's readSemanticStore above —
+      // the unchecked append skips a second full store listing
+      graft.operators.Similarity
+        .appendToSemanticStoreValidated(survivors, storePath, cents)
+    }
 
   // ----- s03: stateful manifest batcher -------------------------------
 

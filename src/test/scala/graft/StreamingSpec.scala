@@ -945,6 +945,7 @@ class StreamingSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("s15spec_").toString
     graft.operators.Similarity.writeSemanticStore(store, s"$tmp/store", cents)
     val in = MemoryStream[(Long, Array[Float])]
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.size
     val q = Streams.streamSemanticDedupAdmit(
       in.toDF().toDF("vec_id", "embedding"), s"$tmp/store", cents,
       s"$tmp/out", s"$tmp/cp", tau = 0.9)
@@ -958,14 +959,52 @@ class StreamingSpec extends SparkSpec {
     // win the min if it had been admitted); 30 is novel
     in.addData((20L, x), (21L, s0), (30L, y))
     q.processAllAvailable()
+    // batch 3: every vector is a duplicate — the survivor set is empty
+    // and the store append must admit nothing (not crash on it)
+    in.addData((40L, s0))
+    q.processAllAvailable()
     q.stop()
+    // the loop's per-batch pins are released, not left for driver GC
+    spark.sparkContext.getPersistentRDDs.size should be <= pinnedBefore
     val hits = spark.read.parquet(s"$tmp/out").collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    hits shouldBe Set((2L, 5L), (20L, 10L), (21L, 5L))
+    hits shouldBe Set((2L, 5L), (20L, 10L), (21L, 5L), (40L, 5L))
     val admitted = graft.operators.Similarity
       .readSemanticStore(spark, s"$tmp/store", cents)
       .collect().map(_.getAs[Long]("vec_id")).toSet
     admitted shouldBe Set(5L, 6L, 10L, 30L)
+  }
+
+  test("microBatch releases every pin when the batch body returns or throws") {
+    implicit val sql = spark.sqlContext
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("microbatch_").toString
+    def live: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def rddOf(pinned: org.apache.spark.sql.DataFrame): Int =
+      pinned.queryExecution.logical match {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }
+    val in = MemoryStream[Long]
+    val pins = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val q = Streams.microBatch(in.toDF(), s"$tmp/cp", None) { (batch, _, pin) =>
+      val p = pin(batch)
+      val big = pin(p.filter($"value" > 1L))
+      pins ++= Seq(rddOf(p), rddOf(big))
+      // held for the whole batch
+      live should contain allElementsOf pins.takeRight(2)
+      if (!p.filter($"value" === 0L).isEmpty) sys.error("poisoned batch")
+    }
+    in.addData(2L, 3L)
+    q.processAllAvailable()
+    in.addData(0L, 5L) // a batch holding 0 fails after pinning
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.processAllAvailable()
+    }
+    Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" / ") should include ("poisoned batch")
+    q.stop()
+    pins.size shouldBe 4
+    live.intersect(pins.toSet) shouldBe empty
   }
 
   test("s15 compaction in the loop: a mid-stream maintenance compact collapses replayed admits and the restarted loop probes the compacted store identically") {
